@@ -15,6 +15,8 @@ is the shape that survives 100 TB; a plain self-join does not.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -33,7 +35,7 @@ from pipeline_airflow_docker_spark.functions.text import (
 from pipeline_airflow_docker_spark.functions.vectors import cosine, sign_bucket
 
 
-def _spread(df: DataFrame, key: str | None = None) -> DataFrame:
+def _spread(df: DataFrame, key: str | Sequence[str] | None = None) -> DataFrame:
     """Scale-adaptive repartition up to 3× the session's default
     parallelism when the input has fewer partitions (delegates to
     operators/skew.py::spread, the generalized form of this helper).

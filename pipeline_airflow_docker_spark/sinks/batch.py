@@ -41,6 +41,10 @@ from pyspark.sql import functions as F
 #   auto-detection swallowed a NUL immediately after a quoted '\n'
 #   ('\n\x00' -> '\n', r16 Hypothesis find). Explicit on both sides so
 #   the wire format is pinned, not platform-defaulted.
+# - charToEscapeQuoteEscaping='"' on BOTH halves: with escape == quote
+#   Spark defaults it to NUL, and the reader then dropped the NUL of any
+#   value holding both NUL and '"' ('\x00"' -> '"'). Pinned on the
+#   writer too, so the wire format is explicit.
 #
 # CSV stays a TEXTUAL hand-off, but the dialect's numeric/temporal
 # fidelity is probed, not assumed (round 11, pinned in
@@ -57,6 +61,7 @@ CSV_LOSSLESS_WRITE: dict[str, str | bool] = {
     "ignoreLeadingWhiteSpace": False,
     "ignoreTrailingWhiteSpace": False,
     "escape": '"',
+    "charToEscapeQuoteEscaping": '"',
     "nullValue": "\\N",
     "lineSep": "\n",
     "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",

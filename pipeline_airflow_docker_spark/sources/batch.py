@@ -74,9 +74,14 @@ def fetch_url_to_staging(
 # quoted embedded '\n' ('\n\x00' read back as '\n' — found by the r16
 # Hypothesis sweep); pinning '\n' restores exact fidelity for control
 # bytes adjacent to separators. The writer half pins the same lineSep.
+# charToEscapeQuoteEscaping is load-bearing as well: with escape equal
+# to quote, Spark defaults it to NUL, and the parser then drops a NUL
+# from any quoted value that also holds a '"' ('\x00"' read back as
+# '"'); pinning it to the quote char keeps every such value exact.
 CSV_LOSSLESS_READ: dict[str, str | bool] = {
     "multiLine": True,
     "escape": '"',
+    "charToEscapeQuoteEscaping": '"',
     "nullValue": "\\N",
     "emptyValue": "",
     "lineSep": "\n",

@@ -40,7 +40,11 @@ def run_to_df(
     joins open FOUR — so partition count should track expected state
     volume, not the session's batch-shuffle width. The setting is
     baked into the checkpoint at first start, which is why it's a
-    per-query knob here rather than session config."""
+    per-query knob here rather than session config.
+
+    A query still running after ``timeout_sec`` is stopped and raises
+    ``TimeoutError``: a partial memory table must never come back
+    looking like the answer."""
     spark: SparkSession = sdf.sparkSession
     name = f"stream_out_{uuid.uuid4().hex[:12]}"
     # Throwaway bounded-replay checkpoint on the fastest local
@@ -56,11 +60,21 @@ def run_to_df(
         )
         if foreach_batch is not None:
             q = writer.outputMode(output_mode).foreachBatch(foreach_batch).start()
-            q.awaitTermination(timeout_sec)
+            _await(q, timeout_sec)
             return spark.createDataFrame([], sdf.schema)
         q = writer.outputMode(output_mode).format("memory").queryName(name).start()
-        q.awaitTermination(timeout_sec)
+        _await(q, timeout_sec)
         return spark.table(name)
     finally:
         if state_partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+
+
+def _await(q, timeout_sec: float) -> None:
+    """Wait for a bounded query to end; stop it and raise if it has not
+    ended within ``timeout_sec``."""
+    if not q.awaitTermination(timeout_sec):
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {q.name or q.id} still running after {timeout_sec} s; stopped"
+        )

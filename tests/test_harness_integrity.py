@@ -126,8 +126,16 @@ def test_bench_subprocess_stdout_survives_driver_tail():
         SPARK_GRAFT_BENCH_PASSES="1",
         SPARK_GRAFT_BENCH_KEYS="q_count_gate",
     )
+    # bench.py as __main__, with the background class-data-sharing
+    # build of get_spark switched off (see conftest.py).
+    run_bench = (
+        "import runpy, sys; sys.path.insert(0, sys.argv[1]); "
+        "from pipeline_airflow_docker_spark import session; "
+        "session.start_cds_build = lambda layout: None; "
+        "runpy.run_path(sys.argv[2], run_name='__main__')"
+    )
     proc = subprocess.run(
-        [sys.executable, os.path.join(_REPO, "bench.py")],
+        [sys.executable, "-c", run_bench, _REPO, os.path.join(_REPO, "bench.py")],
         capture_output=True, text=True, env=env, timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]

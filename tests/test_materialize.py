@@ -145,3 +145,11 @@ def test_deps_entries_die_with_the_child(spark):
     del parent
     gc.collect()
     assert parent_ref() is None  # _DEPS did not leak a strong ref
+
+
+@pytest.mark.parametrize("raw", ["inf", "-inf", "nan", "-1", "1e308", "eight"])
+def test_malformed_shm_headroom_falls_back_to_the_default(monkeypatch, raw):
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_MIN_FREE_GB", raw)
+    assert mat._shm_min_free_bytes() == 8 * 1024**3
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_MIN_FREE_GB", "0.5")
+    assert mat._shm_min_free_bytes() == 512 * 1024**2

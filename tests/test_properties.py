@@ -992,6 +992,9 @@ TEXTS = st.lists(
 @example(texts=["\n\x00"])
 @example(texts=["\n\x00b", "x\n\x00", "\r\x00", "\r\n", "\r", "\n\r", "\x00"])
 @example(texts=["a\x00b", "\x00\x00", "\n", "\r\x00b", "x\r\n\x00", None, ""])
+# NUL together with '"' in one value: with escape == quote the reader's
+# default charToEscapeQuoteEscaping (NUL) dropped the NUL.
+@example(texts=['\x00"', '"\x00', '"\r\x00'])
 def test_lossless_csv_round_trip_law(spark, tmp_path_factory, texts):
     from pipeline_airflow_docker_spark.sinks.batch import write_csv  # noqa: PLC0415
     from pipeline_airflow_docker_spark.sources.batch import read_csv  # noqa: PLC0415

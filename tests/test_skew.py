@@ -115,3 +115,32 @@ def test_spread_still_fires_through_broadcast_joins(spark):
     assert sorted(r["row_id"] for r in out.collect()) == sorted(
         r["row_id"] for r in joined.collect()
     )
+
+
+def test_spread_noops_when_only_a_subquery_shuffles(spark):
+    """A serial scan filtered by a scalar subquery whose aggregate
+    shuffles: the Exchange sits in the subquery, not in the scan's own
+    lineage, yet spread() still no-ops. Probing ``.rdd`` would run that
+    subquery eagerly, and the spread plan would run it again, so the
+    guard counts every shuffle in the printed plan, subqueries included.
+    It runs nothing either way: no job is launched by the call."""
+    from pipeline_airflow_docker_spark.operators.skew import spread
+
+    base = spark.range(0, 1000, 1, 1).withColumn("v", F.col("id") % 7)
+    wide = spark.range(0, 1000, 1, 4).withColumn("w", F.col("id") % 5)
+    wide.createOrReplaceTempView("spread_subquery_wide")
+    base.createOrReplaceTempView("spread_subquery_base")
+    df = spark.sql(
+        "SELECT * FROM spread_subquery_base "
+        "WHERE v > (SELECT avg(w) FROM spread_subquery_wide)"
+    )
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Subquery" in plan and "Exchange SinglePartition" in plan
+    sc = spark.sparkContext
+    sc.setJobGroup("spread-subquery-test", "spread guard")
+    try:
+        assert spread(df, key="id") is df
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert sc.statusTracker().getJobIdsForGroup("spread-subquery-test") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)

@@ -5,7 +5,9 @@ from __future__ import annotations
 
 import os
 import tempfile
+import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from pipeline_airflow_docker_spark.catalog import table
@@ -34,6 +36,20 @@ def test_tumbling_stream_equals_batch(spark, sf_dir):
     )
     batch_out = tumbling_counts(table(spark, sf_dir, "events"))
     assert _rows(stream_out) == _rows(batch_out)
+
+
+def test_timed_out_bounded_query_raises_and_is_stopped(spark, sf_dir):
+    """A bounded run that outlives its timeout must not hand back what
+    it has so far: the query is stopped and the call raises."""
+    sdf = stream_table(spark, sf_dir, "events").select("event_id")
+
+    def slow_batch(batch_df, batch_id):
+        time.sleep(3)
+
+    before = {q.id for q in spark.streams.active}
+    with pytest.raises(TimeoutError, match="still running"):
+        run_to_df(sdf, "append", foreach_batch=slow_batch, timeout_sec=1)
+    assert {q.id for q in spark.streams.active} == before
 
 
 def test_session_multibatch_state_merges(spark, sf_dir):

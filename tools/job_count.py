@@ -33,7 +33,8 @@ def _jobs(base: str, app_id: str) -> list[dict]:
 def _jobs_stable(base: str, app_id: str) -> set[int]:
     """The status store is fed by the ASYNC listener bus, so a read
     immediately after collect() can miss just-finished jobs. Poll until
-    two consecutive reads agree."""
+    two consecutive reads agree; warn when they never do, since the
+    count may then be stale-low."""
     import time  # noqa: PLC0415
 
     prev = {j["jobId"] for j in _jobs(base, app_id)}
@@ -43,6 +44,10 @@ def _jobs_stable(base: str, app_id: str) -> set[int]:
         if cur == prev:
             return cur
         prev = cur
+    print(
+        "WARNING: job list still changing after 20 polls; this count may be low",
+        file=sys.stderr,
+    )
     return prev
 
 
