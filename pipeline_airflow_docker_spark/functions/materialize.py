@@ -51,7 +51,6 @@ from pyspark.storagelevel import StorageLevel
 MODES = ("local_checkpoint", "disk_persist", "parquet_scratch")
 
 _SCRATCH_ROOT: str | None = None
-_ROOT_IS_OURS = False  # created via mkdtemp (sweep whole root at exit)
 
 # DataFrame -> ("disk_persist", None) | ("parquet_scratch", path).
 # Weak keys bound this dict's own growth, but dropping the Python
@@ -105,7 +104,8 @@ def _shm_min_free_bytes() -> int:
 def scratch_mkdtemp(prefix: str) -> str:
     """mkdtemp on the FASTEST available local scratch, for throwaway
     harness artifacts (streaming checkpoints, staged stream topics,
-    round-trip staging, scratch parquet).
+    round-trip staging, scratch parquet). The dir is removed at
+    interpreter exit.
 
     r17 optimization: the default tempdir (/tmp) sits on this box's
     shared virtio disk, whose multi-second latency bursts land
@@ -128,11 +128,12 @@ def scratch_mkdtemp(prefix: str) -> str:
     to own the fixed path and everyone else's mkdtemp inside it died
     with PermissionError). Any tmpfs failure falls back to the system
     default rather than raising."""
+    path = None
     env = os.environ.get("SPARK_GRAFT_SCRATCH")
     if env:
         os.makedirs(env, exist_ok=True)
-        return tempfile.mkdtemp(prefix=prefix, dir=env)
-    if os.path.isdir("/dev/shm"):
+        path = tempfile.mkdtemp(prefix=prefix, dir=env)
+    elif os.path.isdir("/dev/shm"):
         try:
             st = os.statvfs("/dev/shm")
             if st.f_bavail * st.f_frsize >= _shm_min_free_bytes():
@@ -153,32 +154,27 @@ def scratch_mkdtemp(prefix: str) -> str:
                     and rst.st_uid == os.getuid()
                     and not (rst.st_mode & 0o077)
                 ):
-                    return tempfile.mkdtemp(prefix=prefix, dir=root)
+                    path = tempfile.mkdtemp(prefix=prefix, dir=root)
         except OSError:
             pass
-    return tempfile.mkdtemp(prefix=prefix)
+    path = path or tempfile.mkdtemp(prefix=prefix)
+    _SCRATCH_PATHS.add(path)
+    return path
 
 
 def _scratch_dir() -> str:
-    global _SCRATCH_ROOT, _ROOT_IS_OURS  # noqa: PLW0603
+    global _SCRATCH_ROOT  # noqa: PLW0603
     if _SCRATCH_ROOT is None:
         env = os.environ.get("SPARK_GRAFT_SCRATCH")
-        if env:
-            _SCRATCH_ROOT = env
-        else:
-            _SCRATCH_ROOT = scratch_mkdtemp("spark_graft_scratch_")
-            _ROOT_IS_OURS = True
+        _SCRATCH_ROOT = env or scratch_mkdtemp("spark_graft_scratch_")
     return _SCRATCH_ROOT
 
 
 @atexit.register
 def _sweep_scratch() -> None:
-    """Delete scratch this process created. A user-supplied
-    ``SPARK_GRAFT_SCRATCH`` root is preserved — only our uuid subdirs
-    inside it are removed."""
-    if _ROOT_IS_OURS and _SCRATCH_ROOT:
-        shutil.rmtree(_SCRATCH_ROOT, ignore_errors=True)
-        return
+    """Delete every scratch dir this process created. A user-supplied
+    ``SPARK_GRAFT_SCRATCH`` root is never registered, so it is kept —
+    only the dirs made inside it are removed."""
     for path in _SCRATCH_PATHS:
         shutil.rmtree(path, ignore_errors=True)
 

@@ -15,8 +15,6 @@ is the shape that survives 100 TB; a plain self-join does not.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -33,33 +31,7 @@ from pipeline_airflow_docker_spark.functions.text import (
     tokens,
 )
 from pipeline_airflow_docker_spark.functions.vectors import cosine, sign_bucket
-
-
-def _spread(df: DataFrame, key: str | Sequence[str] | None = None) -> DataFrame:
-    """Scale-adaptive repartition up to 3× the session's default
-    parallelism when the input has fewer partitions (delegates to
-    operators/skew.py::spread, the generalized form of this helper).
-
-    The shingle/signature stages are CPU-bound per-document work; a
-    small corpus read from one parquet file splits at row-group
-    granularity (often < cores), which serializes the whole signature
-    computation onto a few tasks (measured 7× slowdown at sf0.1 on
-    local[32]). The 3× factor matters as much as the floor: an input
-    that lands just above the core count (34 splits on 32 cores —
-    the sf10 documents table) runs as one full wave plus a 2-task
-    straggler wave, doubling wall clock; 3× cores gives the scheduler
-    enough granularity to balance (measured 2.4× on per-doc hash
-    stages). At 100 TB the input has orders of magnitude more splits
-    than 3× cores and this is a no-op — the guard keeps the extra
-    shuffle away from inputs that are already parallel enough.
-
-    ``key`` (r18): hash-distribute on a high-cardinality natural key
-    (the doc id) instead of round-robin — per-row deterministic, so it
-    skips round-robin's sort-before-repartition pass (SPARK-23207);
-    same measured trade as skew.spread's flagship numbers."""
-    from pipeline_airflow_docker_spark.operators.skew import spread  # noqa: PLC0415
-
-    return spread(df, key=key)
+from pipeline_airflow_docker_spark.operators.skew import spread
 
 
 def dedup_exact(df: DataFrame, keys: list[str], order: list[Column] | None = None) -> DataFrame:
@@ -174,7 +146,7 @@ def ngram_jaccard_pairs(
     # otherwise recompute the shingle pipeline per side (mode knob:
     # functions/materialize.py).
     sh = materialize(
-        _spread(df, key=id_col)
+        spread(df, key=id_col)
         # toks staged as a column: the shingle lambda reads it per
         # element; inline it would re-split per access (see
         # _shingle_table).
@@ -222,7 +194,7 @@ def _shingle_table(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFra
         # of round-robin — skips the SPARK-23207 sort-before-repartition
         # pass; q_dedup_minhash 0.955 → 0.735 s, q_dedup_simhash
         # 1.25 → 0.82 s at sf0.1, checksum-identical.
-        _spread(df, key=id_col)
+        spread(df, key=id_col)
         # Two projections on purpose: the token-hash array must be a
         # real column before the shingle lambda reads it, or Catalyst
         # re-computes the md5 transform per element access (see
@@ -383,7 +355,7 @@ def simhash_docs(
         else token_hashes32(tokens(text_col))
     )
     ex = (
-        _spread(df, key=id_col)
+        spread(df, key=id_col)
         .select(
             F.col(id_col).alias("id"),
             ih32.alias("__ih32"),
@@ -508,15 +480,16 @@ def resolve_components(
         # Push each node's current component to its neighbours, then
         # take the min of (own component, pushed components) per node.
         #
-        # r18 measured-and-REJECTED (VERDICT item 3, variant kept in
-        # tools/opt_variants_r18.py::dedup_resolve_foldcount): folding
-        # the convergence check into this aggregate — tag the own-label
-        # row, min(__own) through the same groupBy, then count rows
-        # where the min beat the own label. The count still needs its
-        # own job (an eager localCheckpoint returns no aggregates), so
-        # the fold removed NO job and pushed an extra column through
-        # every round's union+shuffle: 1.70 → 2.04 s checksum / 1.19 →
-        # 2.14 s noop at sf0.1. The join below is also cheaper than it
+        # r18 measured-and-REJECTED (VERDICT item 3; the variant is
+        # dedup_resolve_foldcount in tools/opt_variants_r18.py as of
+        # commit a1e74f1): folding the convergence check into this
+        # aggregate — tag the own-label row, min(__own) through the
+        # same groupBy, then count rows where the min beat the own
+        # label. The count still needs its own job (an eager
+        # localCheckpoint returns no aggregates), so the fold removed
+        # NO job and pushed an extra column through every round's
+        # union+shuffle: 1.70 → 2.04 s checksum / 1.19 → 2.14 s noop
+        # at sf0.1. The join below is also cheaper than it
         # looks at scale: both sides are materialized with
         # hashpartitioning(id), so it plans exchange-free.
         pushed = edges.join(labels, edges["src"] == labels["id"]).select(

@@ -94,9 +94,12 @@ def spread(
     target — at cluster scale a 100 TB table carries orders of
     magnitude more row groups than ``3 × cores`` and this is a no-op,
     so the extra exchange exists exactly when the input layout starves
-    the cores and never otherwise. (Same contract as the dedup
-    operators' round-robin ``_spread``, generalized; the 3× factor's
-    straggler-wave rationale is documented there.)
+    the cores and never otherwise. The 3× factor matters as much as
+    the floor: an input that lands just above the core count (34
+    splits on 32 cores — the sf10 documents table) runs as one full
+    wave plus a 2-task straggler wave, doubling wall clock; 3× cores
+    gives the scheduler enough granularity to balance (measured 2.4×
+    on the dedup operators' per-doc hash stages).
 
     ``key`` selects HASH distribution on an existing high-cardinality
     column — unlike round-robin ``repartition(n)``, hash partitioning

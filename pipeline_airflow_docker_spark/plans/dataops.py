@@ -833,3 +833,91 @@ def q_quantile_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
             dsum("value").alias("sum_value"),
         )
     )
+
+
+# --------------------------------------------------------------------
+# B46 deterministic mode + lower median (operators/profile.py::
+# mode_median) per event_type over value, bin width 10. Built-in
+# mode() leaves ties arbitrary in both engines; this pins them.
+# --------------------------------------------------------------------
+@query(
+    "q_agg_mode",
+    oracle="""
+    WITH b AS (
+      SELECT event_type, value,
+             CAST(floor(value / 10.0) AS BIGINT) AS vbin
+      FROM events WHERE value IS NOT NULL
+    ),
+    md AS (
+      SELECT event_type, vbin AS mode_bin, c AS mode_count FROM (
+        SELECT event_type, vbin, count(*) AS c,
+               ROW_NUMBER() OVER (PARTITION BY event_type
+                                  ORDER BY count(*) DESC, vbin) AS rn
+        FROM b GROUP BY event_type, vbin
+      ) WHERE rn = 1
+    ),
+    me AS (
+      SELECT event_type, n, value AS median_low FROM (
+        SELECT event_type, value,
+               ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY value) AS rn,
+               count(*) OVER (PARTITION BY event_type) AS n
+        FROM b
+      ) WHERE rn = (n + 1) // 2
+    )
+    SELECT me.event_type, n, median_low, mode_bin, mode_count
+    FROM me JOIN md ON md.event_type = me.event_type
+    """,
+)
+def q_agg_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pipeline_airflow_docker_spark.operators.profile import (  # noqa: PLC0415
+        mode_median,
+    )
+
+    e = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+    return mode_median(
+        e.select("event_type", "value"), "event_type", "value", bin_width=10.0
+    )
+
+
+# --------------------------------------------------------------------
+# B47 two-sample KS drift (operators/profile.py::ks_statistic):
+# click-vs-view distribution gap over events.value. The oracle cumsums
+# one global ordering; the operator's bin-offset decomposition must
+# reproduce it exactly.
+# --------------------------------------------------------------------
+@query(
+    "q_ks_drift",
+    oracle="""
+    WITH pv AS (
+      SELECT value,
+             sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS ca,
+             sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS cb
+      FROM events
+      WHERE event_type IN ('click', 'view') AND value IS NOT NULL
+      GROUP BY value
+    ),
+    c AS (
+      SELECT value,
+             sum(ca) OVER (ORDER BY value
+                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cuma,
+             sum(cb) OVER (ORDER BY value
+                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cumb
+      FROM pv
+    ),
+    t AS (SELECT CAST(sum(ca) AS BIGINT) AS n_a,
+                 CAST(sum(cb) AS BIGINT) AS n_b FROM pv)
+    SELECT n_a, n_b,
+           round(abs(cuma::DOUBLE / n_a - cumb::DOUBLE / n_b), 6) AS ks_stat,
+           value AS at_value
+    FROM c, t
+    ORDER BY ks_stat DESC, at_value
+    LIMIT 1
+    """,
+)
+def q_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pipeline_airflow_docker_spark.operators.profile import (  # noqa: PLC0415
+        ks_statistic,
+    )
+
+    e = table(spark, sf_dir, "events")
+    return ks_statistic(e, "value", "event_type", "click", "view", bin_width=10.0)

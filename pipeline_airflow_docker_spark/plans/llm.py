@@ -864,11 +864,17 @@ def q_chunk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # boundary. randomSplit would re-deal membership every run; this is a
 # pure function of the key (map-side projection, zero shuffle).
 # --------------------------------------------------------------------
-_DD_BUCKET1000 = (
-    "list_reduce(list_prepend(0::BIGINT, list_transform(range(1, 9), i -> "
-    "(strpos('0123456789abcdef', substr(md5('42:' || CAST(doc_id AS VARCHAR)), i, 1)) - 1)::BIGINT)), "
-    "(acc, d) -> acc * 16 + d) % 1000"
-)
+def _dd_h32(expr: str) -> str:
+    """DuckDB mirror of operators/splits.hash_mod(key, 2^32): integer
+    value of the first 8 hex digits of md5("42:" || key)."""
+    return (
+        "list_reduce(list_prepend(0::BIGINT, list_transform(range(1, 9), i -> "
+        f"(strpos('0123456789abcdef', substr(md5('42:' || CAST({expr} AS VARCHAR)), i, 1)) - 1)::BIGINT)), "
+        "(acc, d) -> acc * 16 + d)"
+    )
+
+
+_DD_BUCKET1000 = f"{_dd_h32('doc_id')} % 1000"
 
 
 @query(
@@ -935,11 +941,7 @@ def q_mix_corpora(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ordering contract (shard, doc_id, ord); the physical partitionBy
 # write is exercised in tests/test_llm.py.
 # --------------------------------------------------------------------
-_DD_SHARD16 = (
-    "list_reduce(list_prepend(0::BIGINT, list_transform(range(1, 9), i -> "
-    "(strpos('0123456789abcdef', substr(md5('42:' || CAST(doc_id AS VARCHAR)), i, 1)) - 1)::BIGINT)), "
-    "(acc, d) -> acc * 16 + d) % 16"
-)
+_DD_SHARD16 = f"{_dd_h32('doc_id')} % 16"
 
 
 @query(
@@ -1000,11 +1002,7 @@ def q_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 # as q_split_hash; the invariant (one split per source) is pinned in
 # tests/test_llm.py.
 # --------------------------------------------------------------------
-_DD_SRCBUCKET1000 = (
-    "list_reduce(list_prepend(0::BIGINT, list_transform(range(1, 9), i -> "
-    "(strpos('0123456789abcdef', substr(md5('42:' || source), i, 1)) - 1)::BIGINT)), "
-    "(acc, d) -> acc * 16 + d) % 1000"
-)
+_DD_SRCBUCKET1000 = f"{_dd_h32('source')} % 1000"
 
 
 @query(
@@ -1784,3 +1782,184 @@ def q_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_types,
         (F.size(F.array_distinct(toks)).cast("double") / F.size(toks)).alias("ttr"),
     )
+
+
+# --------------------------------------------------------------------
+# C27 per-source caps (operators/splits.py::cap_per_group): hard
+# ceiling of 10 docs per source, membership content-addressed by
+# seeded md5 priority. The oracle replays the identical window.
+# --------------------------------------------------------------------
+@query(
+    "q_source_caps",
+    oracle="""
+    SELECT doc_id, source, cap_rank FROM (
+      SELECT doc_id, source,
+             CAST(ROW_NUMBER() OVER (
+               PARTITION BY source
+               ORDER BY md5('42:' || CAST(doc_id AS VARCHAR)), doc_id
+             ) AS INT) AS cap_rank
+      FROM documents
+    ) WHERE cap_rank <= 10
+    """,
+)
+def q_source_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pipeline_airflow_docker_spark.operators.splits import (  # noqa: PLC0415
+        cap_per_group,
+    )
+
+    d = table(spark, sf_dir, "documents").select("doc_id", "source")
+    return cap_per_group(d, ["source"], cap=10, key_col="doc_id")
+
+
+# --------------------------------------------------------------------
+# C28 weighted sampling (operators/splits.py::weighted_sample):
+# Efraimidis–Spirakis A-ES, weight = n_chars, k = 100. Content-
+# addressed u, so the oracle reproduces the exact sample: score =
+# round(ln((h32 + 0.5) / 2^32) / w, 9), top-k by (score desc, key).
+# The + 0.0 normalizes negative zero (r12 probe): the score tends to
+# 0⁻ as h32 -> 2^32, and round(-tiny) is +0.0 on Spark (BigDecimal
+# has no -0) but -0.0 on DuckDB (binary nearbyint) — a ~2-in-2^32
+# per-doc hash event, unreachable in any fixture but real over a
+# billion-doc corpus. Pinned in test_cast_grammar.py.
+# --------------------------------------------------------------------
+@query(
+    "q_sample_weighted",
+    oracle=f"""
+    SELECT doc_id, n_chars,
+           round(ln(({_dd_h32("doc_id")} + 0.5) / 4294967296.0)
+                 / n_chars, 9) + 0.0 AS sample_score
+    FROM documents
+    WHERE n_chars > 0
+    ORDER BY sample_score DESC, doc_id
+    LIMIT 100
+    """,
+)
+def q_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pipeline_airflow_docker_spark.operators.splits import (  # noqa: PLC0415
+        weighted_sample,
+    )
+
+    d = table(spark, sf_dir, "documents").select("doc_id", "n_chars")
+    return weighted_sample(d, weight_col="n_chars", k=100, key_col="doc_id")
+
+
+# --------------------------------------------------------------------
+# C29 word-distribution entropy (operators/textstats.py::word_entropy)
+# per source: H = ln(S) - sum(c*ln(c))/S, terms rounded to 6dp and
+# summed in exact DECIMAL (order-independent); decimal -> double via
+# the VARCHAR round-trip on the DuckDB side (correctly-rounded — see
+# q_agg_moments' engine-quirk note).
+# --------------------------------------------------------------------
+@query(
+    "q_word_entropy",
+    oracle="""
+    WITH w AS (
+      SELECT source, unnest(string_split(text, ' ')) AS w FROM documents
+    ),
+    c AS (
+      SELECT source, w, count(*) AS c FROM w WHERE w <> '' GROUP BY source, w
+    ),
+    a AS (
+      SELECT source, CAST(sum(c) AS BIGINT) AS n_tokens, count(*) AS n_types,
+             CAST(CAST(sum(CAST(round(c * ln(c), 6) AS DECIMAL(28,6)))
+                  AS VARCHAR) AS DOUBLE) AS sclc
+      FROM c GROUP BY source
+    )
+    SELECT source, n_tokens, n_types,
+           round(ln(n_tokens::DOUBLE) - sclc / n_tokens::DOUBLE, 6)
+             AS entropy_nats
+    FROM a
+    """,
+)
+def q_word_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pipeline_airflow_docker_spark.operators.textstats import (  # noqa: PLC0415
+        word_entropy,
+    )
+
+    return word_entropy(table(spark, sf_dir, "documents"), "source")
+
+
+# --------------------------------------------------------------------
+# C30 bigram PMI (operators/textstats.py::pmi_bigrams): top-20
+# collocations, PMI in log space with a FIXED association order so no
+# count product overflows and both engines produce the identical
+# double: ln(b) + 2*ln(tu) - ln(tb) - ln(u1) - ln(u2).
+# --------------------------------------------------------------------
+@query(
+    "q_pmi_bigrams",
+    oracle="""
+    WITH toks AS (SELECT string_split(text, ' ') AS t FROM documents),
+    pairs AS (
+      SELECT p.w1 AS w1, p.w2 AS w2 FROM (
+        SELECT unnest(list_transform(generate_series(1, len(t) - 1),
+                      i -> struct_pack(w1 := t[i], w2 := t[i + 1]))) AS p
+        FROM toks
+      )
+    ),
+    bi AS (SELECT w1, w2, count(*) AS pair_count FROM pairs GROUP BY w1, w2),
+    uni AS (
+      SELECT w, count(*) AS u FROM (
+        SELECT unnest(string_split(text, ' ')) AS w FROM documents
+      ) WHERE w <> '' GROUP BY w
+    ),
+    tot AS (SELECT (SELECT sum(pair_count) FROM bi) AS tb,
+                   (SELECT sum(u) FROM uni) AS tu)
+    SELECT w1, w2, pair_count,
+           round(ln(pair_count) + 2 * ln(tu) - ln(tb) - ln(u1.u) - ln(u2.u),
+                 6) AS pmi
+    FROM bi, tot
+    JOIN uni u1 ON u1.w = bi.w1
+    JOIN uni u2 ON u2.w = bi.w2
+    WHERE pair_count >= 5
+    ORDER BY pmi DESC, w1, w2
+    LIMIT 20
+    """,
+)
+def q_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pipeline_airflow_docker_spark.operators.textstats import (  # noqa: PLC0415
+        pmi_bigrams,
+    )
+
+    return pmi_bigrams(table(spark, sf_dir, "documents"), min_count=5, top_k=20)
+
+
+# --------------------------------------------------------------------
+# C31 Zipf slope (operators/textstats.py::zipf_slope) per lang:
+# least-squares ln(freq) ~ ln(rank), moments in exact DECIMAL (B37's
+# trick), slope as fixed double arithmetic.
+# --------------------------------------------------------------------
+@query(
+    "q_zipf_slope",
+    oracle="""
+    WITH c AS (
+      SELECT lang, w, count(*) AS c FROM (
+        SELECT lang, unnest(string_split(text, ' ')) AS w FROM documents
+      ) WHERE w <> '' GROUP BY lang, w
+    ),
+    xy AS (
+      SELECT lang,
+             round(ln(ROW_NUMBER() OVER (PARTITION BY lang
+                                         ORDER BY c DESC, w)), 8) AS x,
+             round(ln(c), 8) AS y
+      FROM c
+    ),
+    m AS (
+      SELECT lang, count(*) AS n_types,
+             CAST(CAST(sum(CAST(round(x, 8) AS DECIMAL(28,8))) AS VARCHAR) AS DOUBLE) AS sx,
+             CAST(CAST(sum(CAST(round(y, 8) AS DECIMAL(28,8))) AS VARCHAR) AS DOUBLE) AS sy,
+             CAST(CAST(sum(CAST(round(x * x, 8) AS DECIMAL(28,8))) AS VARCHAR) AS DOUBLE) AS sxx,
+             CAST(CAST(sum(CAST(round(x * y, 8) AS DECIMAL(28,8))) AS VARCHAR) AS DOUBLE) AS sxy
+      FROM xy GROUP BY lang
+    )
+    SELECT lang, n_types,
+           round((n_types * sxy - sx * sy) / (n_types * sxx - sx * sx), 6)
+             AS zipf_slope
+    FROM m
+    """,
+)
+def q_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pipeline_airflow_docker_spark.operators.textstats import (  # noqa: PLC0415
+        zipf_slope,
+    )
+
+    return zipf_slope(table(spark, sf_dir, "documents"), "lang")

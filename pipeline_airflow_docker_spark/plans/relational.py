@@ -2041,3 +2041,114 @@ def q_agg_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_returnflag", "n", "med_qty", "mad_qty")
         .orderBy("l_returnflag")
     )
+
+
+# --------------------------------------------------------------------
+# B48 bloom-prefiltered semi join (operators/bloomjoin.py): lineitem
+# semi-joined to high-balance suppliers with an Arrow-vectorized Bloom
+# prefilter ahead of the shuffle. The bloom only reduces shuffled
+# volume — the exact join removes false positives, so the oracle is
+# the plain IN-subquery aggregate.
+# --------------------------------------------------------------------
+@query(
+    "q_bloom_join",
+    oracle="""
+    SELECT l_returnflag, count(*) AS n_items,
+           CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(19,4)))
+                AS VARCHAR) AS DOUBLE) AS sum_price
+    FROM lineitem
+    WHERE l_suppkey IN
+          (SELECT s_suppkey FROM supplier WHERE s_acctbal > 5000)
+    GROUP BY l_returnflag
+    ORDER BY l_returnflag
+    """,
+)
+def q_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pipeline_airflow_docker_spark.operators.bloomjoin import (  # noqa: PLC0415
+        bloom_semi_join,
+    )
+
+    li = table(spark, sf_dir, "lineitem").select(
+        "l_suppkey", "l_returnflag", "l_extendedprice"
+    )
+    dim = (
+        table(spark, sf_dir, "supplier")
+        .filter(F.col("s_acctbal") > 5000)
+        .select("s_suppkey")
+    )
+    semi = bloom_semi_join(li, "l_suppkey", dim, "s_suppkey")
+    return (
+        semi.groupBy("l_returnflag")
+        .agg(
+            F.count(F.lit(1)).alias("n_items"),
+            dsum("l_extendedprice").alias("sum_price"),
+        )
+        .orderBy("l_returnflag")
+    )
+
+
+# --------------------------------------------------------------------
+# B49 fixed-point PageRank (operators/graph.py): 3 iterations over the
+# symmetrized customer–supplier trade graph, exact int64 fixed-point
+# (sum order cannot perturb the result), top-20 by rank. The oracle
+# unrolls the identical integer recurrence — no recursion, no floats.
+# --------------------------------------------------------------------
+@query(
+    "q_pagerank",
+    oracle="""
+    WITH fwd AS (
+      SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS src,
+                      's' || CAST(l_suppkey AS VARCHAR) AS dst
+      FROM orders JOIN lineitem ON l_orderkey = o_orderkey
+    ),
+    edges AS (
+      SELECT src, dst FROM fwd
+      UNION
+      SELECT dst AS src, src AS dst FROM fwd
+    ),
+    deg AS (SELECT src AS node, count(*) AS deg FROM edges GROUP BY src),
+    nn AS (SELECT count(*) AS n FROM deg),
+    r0 AS (
+      SELECT node, deg,
+             1000000000000 // n AS base,
+             1000000000000 // n AS rank_fp
+      FROM deg, nn
+    ),
+    i1 AS (SELECT e.dst AS node, CAST(sum(r.rank_fp // r.deg) AS BIGINT) AS inc
+           FROM r0 r JOIN edges e ON e.src = r.node GROUP BY e.dst),
+    r1 AS (SELECT r.node, r.deg, r.base,
+                  (15 * r.base + 85 * COALESCE(i.inc, 0)) // 100 AS rank_fp
+           FROM r0 r LEFT JOIN i1 i ON i.node = r.node),
+    i2 AS (SELECT e.dst AS node, CAST(sum(r.rank_fp // r.deg) AS BIGINT) AS inc
+           FROM r1 r JOIN edges e ON e.src = r.node GROUP BY e.dst),
+    r2 AS (SELECT r.node, r.deg, r.base,
+                  (15 * r.base + 85 * COALESCE(i.inc, 0)) // 100 AS rank_fp
+           FROM r1 r LEFT JOIN i2 i ON i.node = r.node),
+    i3 AS (SELECT e.dst AS node, CAST(sum(r.rank_fp // r.deg) AS BIGINT) AS inc
+           FROM r2 r JOIN edges e ON e.src = r.node GROUP BY e.dst),
+    r3 AS (SELECT r.node, r.deg, r.base,
+                  (15 * r.base + 85 * COALESCE(i.inc, 0)) // 100 AS rank_fp
+           FROM r2 r LEFT JOIN i3 i ON i.node = r.node)
+    SELECT node, deg, rank_fp FROM r3
+    ORDER BY rank_fp DESC, node
+    LIMIT 20
+    """,
+)
+def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pipeline_airflow_docker_spark.operators.graph import (  # noqa: PLC0415
+        pagerank_fixed_point,
+        symmetrize,
+    )
+
+    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    edges = (
+        o.join(li, o["o_orderkey"] == li["l_orderkey"])
+        .select(
+            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
+            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
+        )
+        .distinct()
+    )
+    pr = pagerank_fixed_point(symmetrize(edges), iterations=3)
+    return pr.orderBy(F.col("rank_fp").desc(), "node").limit(20)

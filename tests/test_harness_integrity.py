@@ -118,13 +118,15 @@ def test_bench_subprocess_stdout_survives_driver_tail():
     real bench.py as a subprocess on one cheap key at sf0.001 and
     parse its stdout exactly the way the driver does — last non-empty
     line of the final 2,000 chars. The full per-pass record must be on
-    stderr, not stdout."""
+    stderr, not stdout, and the record's calibration must show the
+    pinned SPARK_GRAFT_CPUS honored."""
     env = dict(
         os.environ,
         SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
         SPARK_GRAFT_BENCH_REPS="1",
         SPARK_GRAFT_BENCH_PASSES="1",
         SPARK_GRAFT_BENCH_KEYS="q_count_gate",
+        SPARK_GRAFT_CPUS="2",
     )
     # bench.py as __main__, with the background class-data-sharing
     # build of get_spark switched off (see conftest.py).
@@ -146,6 +148,7 @@ def test_bench_subprocess_stdout_survives_driver_tail():
     assert rec["value"] > 0
     assert rec["queries"].keys() == {"q_count_gate"}
     assert rec["runs_summary"][0]["clean"] is True
+    assert rec["calibration"]["cpus_effective"] == 2
     assert len(line) <= bench.STDOUT_LINE_BUDGET
     assert "# runs_full:" not in proc.stdout
     full_line = [

@@ -4,6 +4,10 @@ memory vs disk vs scratch-store, never semantics."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import pytest
 
 from pipeline_airflow_docker_spark.catalog import table
@@ -53,8 +57,6 @@ def test_dedup_identical_across_modes(spark, sf_dir, monkeypatch):
 def test_release_deletes_parquet_scratch(spark):
     """release() on a scratch materialization frees the disk now, not
     at process exit — iterative loops must not accumulate rounds."""
-    import os  # noqa: PLC0415
-
     df = materialize(spark.range(10), how="parquet_scratch")
     (path,) = [p for _, p in [mat._LIVE[df]]]
     assert path is not None and os.path.isdir(path)
@@ -84,8 +86,6 @@ def test_link_cascade_releases_parent_scratch(spark):
     """release(child) must free a parent pinned via link() — the r10
     release-handle contract (functions/materialize.py:link). Scratch
     parquet makes the effect observable on disk immediately."""
-    import os  # noqa: PLC0415
-
     parent = materialize(spark.range(20), how="parquet_scratch")
     (_, path) = mat._LIVE[parent]
     assert path is not None and os.path.isdir(path)
@@ -153,3 +153,38 @@ def test_malformed_shm_headroom_falls_back_to_the_default(monkeypatch, raw):
     assert mat._shm_min_free_bytes() == 8 * 1024**3
     monkeypatch.setenv("SPARK_GRAFT_SCRATCH_MIN_FREE_GB", "0.5")
     assert mat._shm_min_free_bytes() == 512 * 1024**2
+
+
+def _scratch_child(env_extra: dict[str, str]) -> list[str]:
+    """Run a fresh interpreter that makes two scratch dirs and exits
+    normally; returns their paths."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import os\n"
+        "from pipeline_airflow_docker_spark.functions.materialize import scratch_mkdtemp\n"
+        "paths = [scratch_mkdtemp('sweep_a_'), scratch_mkdtemp('sweep_b_')]\n"
+        "assert all(os.path.isdir(p) for p in paths)\n"
+        "print('\\n'.join(paths))\n"
+    )
+    env = {**os.environ, "PYTHONPATH": root, **env_extra}
+    out = subprocess.run(
+        [sys.executable, "-c", code], env=env, capture_output=True, text=True,
+        timeout=120, check=True,
+    )
+    paths = out.stdout.split()
+    assert len(paths) == 2
+    return paths
+
+
+def test_scratch_dirs_are_swept_at_exit(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_SCRATCH", raising=False)
+    for path in _scratch_child({}):
+        assert not os.path.exists(path), path
+
+
+def test_user_scratch_root_is_kept_and_its_dirs_swept(tmp_path):
+    root = tmp_path / "user_root"
+    paths = _scratch_child({"SPARK_GRAFT_SCRATCH": str(root)})
+    assert all(os.path.dirname(p) == str(root) for p in paths)
+    assert root.is_dir()
+    assert list(root.iterdir()) == []

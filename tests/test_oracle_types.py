@@ -34,8 +34,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from tools.check_parity import oracle_type_violations  # noqa: E402
 from tools.plan_audit import is_streaming  # noqa: E402
 
-os.environ.setdefault("SPARK_GRAFT_STAGED", "1")
-
 from pipeline_airflow_docker_spark import plans  # noqa: E402
 from pipeline_airflow_docker_spark.catalog import TABLES  # noqa: E402
 

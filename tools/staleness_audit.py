@@ -10,10 +10,7 @@ Usage: python tools/staleness_audit.py   # markdown to stdout
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import re
 import sys
 from collections import Counter
 
@@ -21,34 +18,16 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
-def last_green() -> tuple[int, dict[str, int]]:
-    newest_round = 0
-    last: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        newest_round = max(newest_round, rnd)
-        with open(path) as fh:
-            rows = json.load(fh)
-        for key, row in rows.items():
-            ok = (
-                isinstance(row, dict)
-                and row.get("err") is None
-                and row.get("rows_match") is not False
-                and row.get("schema_match") is not False
-                and row.get("hash_match") is not False
-            )
-            if ok:
-                last[key] = max(last.get(key, -1), rnd)
-    return newest_round, last
-
-
 def main() -> int:
-    from pipeline_airflow_docker_spark.plans import QUERIES
+    from pipeline_airflow_docker_spark.plans import (
+        QUERIES,
+        _correctness_files,
+        _last_green,
+    )
 
-    newest, green = last_green()
+    files = _correctness_files()
+    newest = files[-1][0] if files else 0
+    green = _last_green()
     ages = Counter()
     never: list[str] = []
     by_age: dict[int, list[str]] = {}
