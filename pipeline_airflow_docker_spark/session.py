@@ -92,15 +92,9 @@ def _builder(app_name: str, master: str, shuffle_partitions: int) -> SparkSessio
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # UI off by default (saves ~1 s startup + a port per test
-        # process); SPARK_GRAFT_UI=1 enables it so tools/stage_bytes.py
-        # can read per-stage input/shuffle bytes from the REST API.
-        # Exact '1' comparison — raw truthiness would make
-        # SPARK_GRAFT_UI=0 ENABLE the UI (r14 ADVICE).
-        .config(
-            "spark.ui.enabled",
-            "true" if os.environ.get("SPARK_GRAFT_UI") == "1" else "false",
-        )
+        # UI off (saves ~1 s startup + a port per process): the status
+        # store it would show is read in-process (tools/stage_bytes.py).
+        .config("spark.ui.enabled", "false")
     )
     if master.startswith("local"):
         # Local-mode split sizing only. The driver testdata is a single

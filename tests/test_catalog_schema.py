@@ -10,19 +10,13 @@ import shutil
 import pytest
 
 from pipeline_airflow_docker_spark import catalog
+from tools.stage_bytes import group_jobs
 
 # The generated test data: one dir per scale factor, beside the default.
 TESTDATA = [
     os.path.join(os.path.dirname(catalog.DEFAULT_SF_DIR), f"sf{sf}")
     for sf in ("0.001", "0.01", "0.1")
 ]
-
-
-def _jobs_in_group(spark, group: str) -> int:
-    """Jobs of ``group`` the status store saw, after every posted event
-    reached it."""
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.mark.parametrize("sf_dir", TESTDATA)
@@ -44,11 +38,11 @@ def test_catalog_table_launches_no_job(spark, sf_dir):
         sc.setJobGroup("catalog-schema-test.tables", "catalog.table")
         for name in catalog.TABLES:
             catalog.table(spark, sf_dir, name)
-        assert _jobs_in_group(spark, "catalog-schema-test.tables") == 0
+        assert len(group_jobs(spark, "catalog-schema-test.tables")) == 0
         # The counter sees inference's job when there is one.
         sc.setJobGroup("catalog-schema-test.infer", "inference")
         spark.read.parquet(os.path.join(sf_dir, "region.parquet"))
-        assert _jobs_in_group(spark, "catalog-schema-test.infer") >= 1
+        assert len(group_jobs(spark, "catalog-schema-test.infer")) >= 1
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
 

@@ -125,6 +125,7 @@ def test_spread_noops_when_only_a_subquery_shuffles(spark):
     guard counts every shuffle in the printed plan, subqueries included.
     It runs nothing either way: no job is launched by the call."""
     from pipeline_airflow_docker_spark.operators.skew import spread
+    from tools.stage_bytes import group_jobs
 
     base = spark.range(0, 1000, 1, 1).withColumn("v", F.col("id") % 7)
     wide = spark.range(0, 1000, 1, 4).withColumn("w", F.col("id") % 5)
@@ -140,7 +141,6 @@ def test_spread_noops_when_only_a_subquery_shuffles(spark):
     sc.setJobGroup("spread-subquery-test", "spread guard")
     try:
         assert spread(df, key="id") is df
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        assert sc.statusTracker().getJobIdsForGroup("spread-subquery-test") == []
+        assert group_jobs(spark, "spread-subquery-test") == []
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)

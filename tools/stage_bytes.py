@@ -1,25 +1,39 @@
-"""Per-stage input/shuffle byte capture for scale-linearity claims.
+"""Per-key jobs, stages, bytes and wall-clock of qkeys, read in-process
+with the Spark UI off: the scale-linearity gate and the scale sweep.
 
 Round 13's sf100 spot-sweep attributed the above-linear wall-clock
 tail (q_fn_map 12.7x, q_corr_spearman 15.3x, q_join_inner 19.2x on
 10x data) to cold-scan + scratch-I/O walls with *linear plan volumes*
 — argued from plan shape, not measured. This tool converts the
-argument into a measurement: it runs each qkey under a UI-enabled
-session and reads the completed stages' ``inputBytes`` /
-``shuffleReadBytes`` / ``shuffleWriteBytes`` from Spark's REST status
-API (the same numbers the Spark UI's stage table shows), summed over
-exactly the stages the key's action created.
+argument into a measurement. Run it once per SF dir and diff the
+records (tools/stage_bytes_diff.py): if bytes scale ~linearly while
+wall-clock doesn't, the wall is I/O bandwidth (which a real cluster
+scales with nodes), not plan blow-up.
 
-Run it once per SF dir and diff the totals: if bytes scale ~linearly
-while wall-clock doesn't, the wall is I/O bandwidth (which a real
-cluster scales with nodes), not plan blow-up.
+Each key runs ONCE, cold, under its own job group, which covers the
+plan build and the action (bench.py's shape: a JVM-side count of
+every column). After the listener bus drains, the key's jobs come from
+the status tracker and its stages' ``inputBytes`` / ``outputBytes`` /
+``shuffleReadBytes`` / ``shuffleWriteBytes`` and run time from the
+status store (the numbers the Spark UI's stage table shows). Only
+stages that ran count (COMPLETE or FAILED): a job that reuses an
+earlier shuffle lists that shuffle's stage again, as SKIPPED. A stage
+missing from the store (evicted) fails the key rather than reading low,
+unless it was a skipped one.
+
+With no keys it sweeps every batch key but ``--skip``: the round
+ritual behind SCALE.md §10's sf10 tables, for spotting scale-killers
+(a key whose time explodes vs the previous sweep) and outright
+failures. Streaming keys are excluded for the same reason as
+tools/plan_audit.py. A key that raises is recorded with ``ok: false``
+and the run goes on; the exit code is 1 when any key failed.
 
 Usage:
     python tools/stage_bytes.py --sf .benchdata/sf10 q_join_inner q_fn_map
     python tools/stage_bytes.py --sf .benchdata/sf100 --json out.json keys...
+    python tools/stage_bytes.py --sf .benchdata/sf10 [--skip k1,k2]
 
-Env: respects the usual SPARK_GRAFT_* knobs (DRIVER_MEM, SHUFFLE,
-CPUS); forces SPARK_GRAFT_UI=1 before session creation.
+Env: respects the usual SPARK_GRAFT_* knobs (DRIVER_MEM, SHUFFLE, CPUS).
 """
 
 from __future__ import annotations
@@ -29,93 +43,213 @@ import json
 import os
 import sys
 import time
-import urllib.request
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# Must be set before the session exists: spark.ui.enabled is static.
-os.environ.setdefault("SPARK_GRAFT_UI", "1")
+from tools.plan_audit import is_streaming  # noqa: E402
 
 METRICS = ("inputBytes", "outputBytes", "shuffleReadBytes", "shuffleWriteBytes")
+# Stage statuses that ran tasks; SKIPPED stages reuse earlier output.
+RAN = ("COMPLETE", "FAILED")
+
+# Documented quadratic correctness baselines (SCALE.md §10) — excluded
+# from the all-keys sweep by default, as in round 4's sf10 sweep.
+DEFAULT_SKIP = {"q_dedup_embedding", "q_dedup_ngram", "q_semdedup"}
 
 
-def _api(base: str, app_id: str, path: str):
-    url = f"{base}/api/v1/applications/{app_id}/{path}"
-    with urllib.request.urlopen(url, timeout=30) as r:
-        return json.load(r)
+def _gapfill_capped_prepare(spark, sf_dir):
+    """q_gapfill's documented scale path, measured IN-sweep (r11
+    verdict #3): the uncapped min..max grid legitimately exceeds any
+    fill budget on a sparse-enough corpus (sf10: a 95.4M-bucket grid,
+    refused by design), so the sweep times the capped form —
+    max_gap_hours=24 treats longer gaps as series breaks, bounding
+    generated rows at 24 × gap-count — with a budget sized for the
+    capped output (the r11 hand-run: 72,954,600 rows in 15.1 s). The
+    uncapped refusal stays pinned by tests/test_timeseries.py and the
+    graded q_gapfill key keeps the oracle-mirrored uncapped semantics."""
+    from pyspark.sql import functions as F  # noqa: PLC0415
+
+    from pipeline_airflow_docker_spark.catalog import table  # noqa: PLC0415
+    from pipeline_airflow_docker_spark.operators.timeseries import (  # noqa: PLC0415
+        gap_fill_hourly,
+    )
+
+    e = table(spark, sf_dir, "events").filter(
+        (F.col("ts") >= F.lit("2024-01-01 00:00:00").cast("timestamp"))
+        & (F.col("ts") < F.lit("2025-01-01 00:00:00").cast("timestamp"))
+    )
+    # Scale-aware budget (r13: the fixed 200M refused at sf100 —
+    # 633,963,000 capped buckets — and the evidence needed a hand-run).
+    # Under max_gap_hours=24 the fill generates at most 24 rows per
+    # observed gap and gaps < observed rows, so 25 x the window's row
+    # count is a provable ceiling at ANY fixture scale: the capped
+    # sweep entry always runs, while the operator's refusal semantics
+    # for true overruns stay untouched (pinned in
+    # tests/test_timeseries.py and exercised by the graded uncapped
+    # q_gapfill key).
+    # The budget scan runs HERE, in the untimed prepare step — r14 ran
+    # it inside the timed region, so r14's q_gapfill(capped) wall
+    # includes one extra full scan of the filtered events table that
+    # r13's and r15+'s numbers don't (r14 ADVICE; noted in the r15
+    # evidence header so the delta isn't misread as a speedup).
+    budget = 25 * (e.count() or 1)
+
+    def run(spark, sf_dir):
+        return gap_fill_hourly(
+            e, "user_id", "ts", "value",
+            max_fill_steps=budget, max_gap_hours=24,
+        )
+
+    return run
 
 
-def _stage_rows(base: str, app_id: str) -> dict[int, dict]:
-    """Newest attempt per completed/failed stage id."""
-    rows: dict[int, dict] = {}
-    for st in _api(base, app_id, "stages"):
-        if st.get("status") not in ("COMPLETE", "FAILED"):
+# Keys whose graded form refuses by design at big SFs get their
+# documented scale path measured instead, under a "(capped)" label. The
+# value is a PREPARE function: called untimed and outside the key's job
+# group, it returns the (spark, sf_dir) callable that is measured — so
+# budget scans and other setup stay out of the record.
+CAPPED_VARIANTS = {"q_gapfill": ("q_gapfill(capped)", _gapfill_capped_prepare)}
+
+
+def group_jobs(spark, group: str) -> list[int]:
+    """Ids of the jobs of ``group`` the status store saw, after every
+    posted event reached it."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def stage_totals(store, job_ids: list[int]) -> dict:
+    """Stage count, executor run time and METRICS summed over the
+    stages of ``job_ids`` that ran (newest attempt of each), read from
+    the status ``store`` (the JVM ``AppStatusStore``).
+
+    Past ``spark.ui.retainedStages`` the store evicts SKIPPED stages
+    first, even a key's own. Missing stages are accepted only while the
+    stages found COMPLETE match the jobs' own completed-stage counts, so
+    an evicted run stage fails the key rather than reading low."""
+    from py4j.protocol import Py4JJavaError  # noqa: PLC0415
+
+    stage_ids: set[int] = set()
+    completed = 0
+    for j in job_ids:
+        try:
+            job = store.job(j)
+        except Py4JJavaError as e:
+            raise RuntimeError(f"job {j} is no longer in the status store") from e
+        ids = job.stageIds()
+        stage_ids.update(ids.apply(i) for i in range(ids.size()))
+        completed += job.numCompletedStages()
+    ran, missing = [], []
+    for sid in sorted(stage_ids):
+        try:
+            st = store.lastStageAttempt(sid)
+        except Py4JJavaError:
+            missing.append(sid)
             continue
-        sid = st["stageId"]
-        if sid not in rows or st.get("attemptId", 0) > rows[sid].get("attemptId", 0):
-            rows[sid] = st
-    return rows
+        if st.status().name() in RAN:
+            ran.append(st)
+    found = sum(st.status().name() == "COMPLETE" for st in ran)
+    if missing and found < completed:
+        raise RuntimeError(
+            f"the jobs report {completed} completed stages where {found} are "
+            f"held; stages no longer in the status store: {missing}"
+        )
+    rec: dict = {
+        "n_stages": len(ran),
+        "executorRunTime_sec": round(sum(s.executorRunTime() for s in ran) / 1e3, 1),
+    }
+    for m in METRICS:
+        rec[m] = sum(getattr(s, m)() for s in ran)
+    return rec
+
+
+def run_key(spark, sf_dir: str, label: str, fn) -> dict:
+    """Build ``fn(spark, sf_dir)`` and run the count action under a job
+    group of its own; return the key's record."""
+    from pyspark.sql import functions as F  # noqa: PLC0415
+
+    sc = spark.sparkContext
+    group = f"stage-bytes.{label}.{uuid.uuid4().hex}"
+    sc.setJobGroup(group, label)
+    try:
+        t0 = time.time()
+        df = fn(spark, sf_dir)
+        df.select(F.count(F.lit(1)), *[F.count(c) for c in df.columns]).collect()
+        wall = time.time() - t0
+        jobs = group_jobs(spark, group)
+        rec = {"ok": True, "wall_sec": round(wall, 2), "n_jobs": len(jobs)}
+        rec.update(stage_totals(sc._jsc.sc().statusStore(), jobs))
+    except Exception as e:  # noqa: BLE001
+        rec = {"ok": False, "error": f"{type(e).__name__}: {e}"[:400]}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return rec
 
 
 def measure(spark, sf_dir: str, keys: list[str]) -> dict[str, dict]:
-    from pyspark.sql import functions as F  # noqa: PLC0415
-
     from pipeline_airflow_docker_spark import plans  # noqa: PLC0415
 
-    sc = spark.sparkContext
-    base, app_id = sc.uiWebUrl, sc.applicationId
     out: dict[str, dict] = {}
     for name in keys:
-        before = set(_stage_rows(base, app_id))
-        t0 = time.time()
-        df = plans.QUERIES[name](spark, sf_dir)
-        # Same action shape as scale_sweep.py / bench.py.
-        df.select(F.count(F.lit(1)), *[F.count(c) for c in df.columns]).collect()
-        wall = time.time() - t0
-        stages = {
-            sid: st
-            for sid, st in _stage_rows(base, app_id).items()
-            if sid not in before
-        }
-        rec: dict = {
-            "wall_sec": round(wall, 2),
-            "n_stages": len(stages),
-            "executorRunTime_sec": round(
-                sum(s.get("executorRunTime", 0) for s in stages.values()) / 1e3, 1
-            ),
-        }
-        for m in METRICS:
-            rec[m] = sum(s.get(m, 0) for s in stages.values())
-        out[name] = rec
-        print(
-            f"{name:20s} wall={rec['wall_sec']:>8}s stages={rec['n_stages']:>3} "
-            + " ".join(f"{m}={rec[m]/1e6:,.1f}MB" for m in METRICS),
-            flush=True,
-        )
+        if name in CAPPED_VARIANTS:
+            label, prepare = CAPPED_VARIANTS[name]
+            try:
+                rec = run_key(spark, sf_dir, label, prepare(spark, sf_dir))
+            except Exception as e:  # noqa: BLE001
+                rec = {"ok": False, "error": f"prepare: {type(e).__name__}: {e}"[:400]}
+        else:
+            label = name
+            rec = run_key(spark, sf_dir, label, plans.QUERIES[name])
+        out[label] = rec
+        if rec["ok"]:
+            print(
+                f"{label:20s} wall={rec['wall_sec']:>8}s jobs={rec['n_jobs']:>3} "
+                f"stages={rec['n_stages']:>3} "
+                + " ".join(f"{m}={rec[m]/1e6:,.1f}MB" for m in METRICS),
+                flush=True,
+            )
+        else:
+            print(f"{label:20s} FAILED {rec['error'][:120]}", flush=True)
     return out
 
 
-def main() -> int:
+def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/repo/.benchdata/sf10")
     ap.add_argument("--json", default=None, help="write results as JSON here")
-    ap.add_argument("keys", nargs="+")
-    args = ap.parse_args()
+    ap.add_argument(
+        "--skip", default=",".join(sorted(DEFAULT_SKIP)),
+        help="comma list of keys left out when no keys are given",
+    )
+    ap.add_argument("keys", nargs="*", help="default: every batch key")
+    args = ap.parse_args(argv)
 
+    from pipeline_airflow_docker_spark import plans  # noqa: PLC0415
     from pipeline_airflow_docker_spark.session import get_spark  # noqa: PLC0415
 
     spark = get_spark("stage-bytes")
-    if not spark.sparkContext.uiWebUrl:
-        print("ERROR: Spark UI is disabled; REST metrics unavailable "
-              "(session predates SPARK_GRAFT_UI=1?)", file=sys.stderr)
-        return 2
-    results = measure(spark, args.sf, args.keys)
+    skip = set(args.skip.split(","))
+    keys = args.keys or [
+        k for k in sorted(plans.QUERIES) if not is_streaming(k) and k not in skip
+    ]
+    results = measure(spark, args.sf, keys)
     payload = {"sf_dir": args.sf, "results": results}
     if args.json:
         with open(args.json, "w") as f:
             json.dump(payload, f, indent=1)
+    fails = [k for k, r in results.items() if not r["ok"]]
+    timed = sorted(
+        ((k, r["wall_sec"]) for k, r in results.items() if r["ok"]),
+        key=lambda kr: -kr[1],
+    )
+    print(f"\n# {len(results)} keys, {len(fails)} failed; slowest 10:")
+    for name, sec in timed[:10]:
+        print(f"#   {name}: {sec}s")
     print(json.dumps(payload))
-    return 0
+    return 1 if fails else 0
 
 
 if __name__ == "__main__":

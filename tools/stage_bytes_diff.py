@@ -13,8 +13,9 @@ unexplained movement — a widened shuffle, a lost pushdown (inputBytes
 up), an extra stage — while staying silent on wall_sec and
 executorRunTime, which are host weather.
 
-Usage:
-    python tools/stage_bytes.py --sf .benchdata/sf10 --json /tmp/now.json k1 k2 ...
+Usage (the capture reads the status store in-process; no keys means
+every batch key but --skip):
+    python tools/stage_bytes.py --sf .benchdata/sf10 --json /tmp/now.json [k1 k2 ...]
     python tools/stage_bytes_diff.py --baseline evidence/stage_bytes_sf10_top10_r14.json /tmp/now.json
 
 Verdicts per key/metric: OK (within --tol), SMALL (absolute delta
