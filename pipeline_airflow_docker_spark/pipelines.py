@@ -1,11 +1,19 @@
 """End-to-end replays of every reference pipeline (SURVEY.md §3, §5.2-3).
 
-Each function re-expresses one reference DAG as ONE lazy Spark job:
-what was N Airflow tasks passing whole datasets through ``/tmp`` files
-(process boundary per stage, full materialization per stage —
-SURVEY.md §4.1) becomes a single Catalyst plan ending in a bulk sink.
-Airflow remains free to *schedule* these functions; it never touches
-data.
+Each function re-expresses one reference DAG as ONE lazy Catalyst
+plan ending in a bulk sink: what was N Airflow tasks passing whole
+datasets through ``/tmp`` files (process boundary per stage, full
+materialization per stage — SURVEY.md §4.1) becomes a single pass over
+the input. Airflow remains free to *schedule* these functions; it never
+touches data.
+
+The pass is one write job. Load counts ride on it as an
+``Observation`` (``_load``), never a re-read of the sink or a recompute
+of the frame; the only other jobs are the CSV schema inference the
+reference's ``pd.read_csv`` implies (two per file) and, where a DAG
+branches on a count, that one count. Jobs per call, 5k-row CSVs:
+``etl_data_pipeline`` 3, ``etl_data_pipeline_mongodb`` 3,
+``etl_data_pipeline_mongodb_complex`` 7 (tests/test_io_pipelines.py).
 
 Known reference bugs are implemented as intended, not as written
 (SURVEY.md §0 "Reference bugs"): wall-clock stamps use
@@ -22,9 +30,10 @@ sink paths.
 from __future__ import annotations
 
 from collections.abc import Callable, Sequence
+from functools import partial
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -36,7 +45,6 @@ from pipeline_airflow_docker_spark.operators import (
     require_keys,
     union_ragged,
 )
-from pipeline_airflow_docker_spark.operators.quality import count_gate
 from pipeline_airflow_docker_spark.sinks import (
     append_documents,
     kafka_payload,
@@ -49,6 +57,14 @@ from pipeline_airflow_docker_spark.sources import (
     read_rest_json,
     scrape_records,
 )
+
+
+def _load(df: DataFrame, write: Callable[[DataFrame], None]) -> int:
+    """Run ``write`` on ``df`` and return how many rows it wrote, counted
+    by the write job itself (a ``CollectMetrics`` node in its plan)."""
+    rows = Observation()
+    write(df.observe(rows, F.count(F.lit(1)).alias("n")))
+    return rows.get["n"]
 
 
 def data_extraction(spark: SparkSession, csv_path: str, n: int = 5) -> DataFrame:
@@ -69,8 +85,8 @@ def etl_data_pipeline(
     ``mode("overwrite")`` (sink swaps to JDBC when a driver jar is
     deployed — ``sinks.write_jdbc_replace``)."""
     cleaned = drop_null_rows(read_csv(spark, csv_path), how="any")
-    cleaned.write.mode("overwrite").parquet(out_path)
-    return {"rows_loaded": spark.read.parquet(out_path).count()}
+    n = _load(cleaned, lambda df: df.write.mode("overwrite").parquet(out_path))
+    return {"rows_loaded": n}
 
 
 def etl_data_pipeline_mongodb(
@@ -82,8 +98,8 @@ def etl_data_pipeline_mongodb(
     (it existed only to cross task boundaries); the load is one bulk
     document append."""
     cleaned = drop_null_rows(read_csv(spark, csv_path), how="any")
-    append_documents(cleaned, collection_path)
-    return {"rows_loaded": cleaned.count()}
+    n = _load(cleaned, partial(append_documents, path=collection_path))
+    return {"rows_loaded": n}
 
 
 def etl_data_pipeline_mongodb_complex(
@@ -99,18 +115,17 @@ def etl_data_pipeline_mongodb_complex(
     count branch ``> 10`` (:57-62) -> Mongo load or skip -> report.
 
     The two scans union lazily (fan-in O2 is free Spark scheduling);
-    the branch is ``count_gate`` — the count IS the branch decision,
-    exactly the reference's ``nb_lignes`` XCom. The sensor is
-    orchestration (file-arrival at scale = streaming file source).
+    one count of the cleaned frame is the branch decision, exactly the
+    reference's ``nb_lignes`` XCom, and the skip branch writes nothing.
+    The sensor is orchestration (file-arrival at scale = streaming file
+    source).
     """
     combined = union_ragged(read_csv(spark, csv_path_1), read_csv(spark, csv_path_2))
     cleaned = drop_null_rows(combined, how="all")
     nb_lignes = cleaned.count()
-    gated = count_gate(cleaned, min_rows)
-    loaded = 0
-    if not gated.isEmpty():
-        append_documents(gated, collection_path)
-        loaded = nb_lignes
+    loaded = nb_lignes if nb_lignes > min_rows else 0
+    if loaded:
+        append_documents(cleaned, collection_path)
     return {"nb_lignes": nb_lignes, "rows_loaded": loaded, "branch": "load" if loaded else "skip"}
 
 
@@ -136,8 +151,8 @@ def kafka_to_mongo_pipeline(
     posts = read_rest_json(spark, api_url, schema, fetch=fetch)
     bounded = posts.orderBy("id").limit(max_messages)
     projected = bounded.select(F.upper("title").alias("title"))
-    append_documents(projected, collection_path)
-    return {"messages_processed": projected.count()}
+    n = _load(projected, partial(append_documents, path=collection_path))
+    return {"messages_processed": n}
 
 
 def kafka_to_mongo_pipeline_enhanced(
@@ -167,8 +182,8 @@ def kafka_to_mongo_pipeline_enhanced(
     enriched = enrich(valid, source="jsonplaceholder_api", status="raw", ts=ts)
     bounded = enriched.orderBy("id").limit(max_messages)
     deduped = latest_by_key(bounded, keys=["id"], order_by=["processed_timestamp"], tiebreak=["title"])
-    append_documents(deduped, collection_path)
-    n_valid, n_stored = valid.count(), deduped.count()
+    n_stored = _load(deduped, partial(append_documents, path=collection_path))
+    n_valid = valid.count()
     return {
         "processed_items": min(n_valid, max_messages),
         "stored_items": n_stored,
@@ -187,8 +202,8 @@ def kafka_to_mongo(
     decoded = messages.select(
         F.from_json(F.col("value").cast("string"), schema).alias("r")
     ).select("r.*")
-    append_documents(decoded, collection_path)
-    return {"messages_processed": decoded.count()}
+    n = _load(decoded, partial(append_documents, path=collection_path))
+    return {"messages_processed": n}
 
 
 def scrap_to_kafka_to_mongo_pipeline(
@@ -216,8 +231,8 @@ def scrap_to_kafka_to_mongo_pipeline(
         .select("r.*")
         .select(F.upper(F.trim("content")).alias("content"))
     )
-    append_documents(projected, collection_path)
-    return {"messages_processed": projected.count()}
+    n = _load(projected, partial(append_documents, path=collection_path))
+    return {"messages_processed": n}
 
 
 def data_pipeline_workflow(
@@ -233,8 +248,9 @@ def data_pipeline_workflow(
     ~line 45-70]: API -> Kafka ``raw_data_topic`` -> wrap each record
     as ``{original_data, processed_at, status='processed'}`` -> insert
     -> count via XCom -> report. The wrap is the reference's only
-    nested type -> ``nest_struct`` (one ``F.struct`` projection)."""
+    nested type -> ``nest_struct`` (one ``F.struct`` projection), which
+    keeps one row per input row, so both counts are the write's."""
     raw = read_rest_json(spark, api_url, schema, fetch=fetch)
     wrapped = nest_struct(raw, wrapper="original_data", status="processed", ts=ts)
-    append_documents(wrapped, collection_path)
-    return {"data_count": raw.count(), "processed_count": wrapped.count()}
+    n = _load(wrapped, partial(append_documents, path=collection_path))
+    return {"data_count": n, "processed_count": n}

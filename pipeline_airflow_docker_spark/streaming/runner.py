@@ -66,6 +66,9 @@ def run_to_df(
         _await(q, timeout_sec)
         return spark.table(name)
     finally:
+        # The resolved frame keeps the sink's rows; the view would keep
+        # them (partial ones too, after a timeout) for the session.
+        spark.catalog.dropTempView(name)
         if state_partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
 

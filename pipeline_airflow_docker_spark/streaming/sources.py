@@ -14,11 +14,14 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from pipeline_airflow_docker_spark.catalog import table
 from pipeline_airflow_docker_spark.functions.materialize import scratch_mkdtemp
 
-_STAGED: dict[tuple[str, str, int], str] = {}
+# (sf_dir, table, n_files) -> (staged dir, its read schema): the
+# schema rides along so a stream over the dir starts job-free.
+_STAGED: dict[tuple[str, str, int], tuple[str, StructType]] = {}
 
 
 def stage_table(
@@ -27,9 +30,10 @@ def stage_table(
     """Materialize a test table as a directory of parquet files the
     file source can monitor. ``n_files > 1`` + maxFilesPerTrigger
     yields genuine multi-micro-batch runs (state crossing batches).
-    Staged once per (sf_dir, table, n_files) per process."""
+    Staged once per (sf_dir, table, n_files) per process, and its read
+    schema resolved once with it."""
     key = (sf_dir, name, n_files)
-    if key not in _STAGED or not os.path.isdir(_STAGED[key]):
+    if key not in _STAGED or not os.path.isdir(_STAGED[key][0]):
         out = os.path.join(
             scratch_mkdtemp(f"padspark_stream_{name}_"), "data"
         )
@@ -42,8 +46,8 @@ def stage_table(
         else:
             df = df.coalesce(1)
         df.write.mode("overwrite").parquet(out)
-        _STAGED[key] = out
-    return _STAGED[key]
+        _STAGED[key] = (out, spark.read.parquet(out).schema)
+    return _STAGED[key][0]
 
 
 def stream_table(
@@ -56,8 +60,7 @@ def stream_table(
     """Unbounded DataFrame over a staged test table: the engine's
     stand-in for a Kafka topic subscription."""
     path = stage_table(spark, sf_dir, name, n_files)
-    schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(schema)
+    reader = spark.readStream.schema(_STAGED[(sf_dir, name, n_files)][1])
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(path)

@@ -28,6 +28,7 @@ from pipeline_airflow_docker_spark.sources import (
     scrape_records,
 )
 from pipeline_airflow_docker_spark.sources.scrape import parse_page
+from tools.stage_bytes import group_jobs
 
 POSTS_SCHEMA = "userId BIGINT, id BIGINT, title STRING, body STRING"
 
@@ -191,7 +192,7 @@ def test_write_parquet_partitioned_layout(spark, sf_dir, tmp_path):
 
 
 # ------------------------------------------------------------------
-# Reference-DAG replays (one lazy job each)
+# Reference-DAG replays (one pass each)
 # ------------------------------------------------------------------
 
 def test_etl_data_pipeline_replay(spark, hw_csv, tmp_path):
@@ -216,6 +217,85 @@ def test_etl_mongodb_complex_replay_branches(spark, tmp_path):
     # ragged concat semantics: union of both column sets, nulls filled
     assert set(loaded.columns) == {"Month", "1958", "1959", "1960",
                                    "Last name", "First name", "SSN", "Final", "Grade"}
+
+
+def _replay_jobs(spark, group, replay, *args, **kwargs):
+    """Run one replay in job group ``group``: its metrics and job ids."""
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup(group, group)
+        m = replay(spark, *args, **kwargs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return m, group_jobs(spark, group)
+
+
+@pytest.fixture(scope="module")
+def dag_csvs(tmp_path_factory):
+    """hw / airtravel / grades shapes (FIXTURES.md §1.2-1.4), a few
+    hundred rows each, with gaps: every 7th hw row misses a value, and
+    every 5th airtravel row is empty. Returns the paths and the rows
+    each replay loads."""
+    d = tmp_path_factory.mktemp("dag")
+    hw = d / "hw.csv"
+    hw.write_text("Index,Height(Inches),Weight(Pounds)\n" + "".join(
+        f"{i},{60 + i % 13}.5,{'' if i % 7 == 0 else 100 + i}\n" for i in range(500)
+    ))
+    air = d / "airtravel.csv"
+    air.write_text("Month,1958,1959,1960\n" + "".join(
+        ",,,\n" if i % 5 == 0 else f"M{i},{i},{i + 1},{i + 2}\n" for i in range(300)
+    ))
+    grades = d / "grades.csv"
+    grades.write_text("Last name,First name,SSN,Final,Grade\n" + "".join(
+        f"L{i},F{i},{i:03d}-00-0000,{i % 100}.0,B\n" for i in range(200)
+    ))
+    return {"hw": str(hw), "air": str(air), "grades": str(grades),
+            "hw_complete": 500 - 72, "union_non_empty": 240 + 200}
+
+
+def test_replays_are_single_pass(spark, dag_csvs, tmp_path):
+    """One write job per replay, the load count riding on it: the
+    only other jobs are CSV schema inference (two per file) and, for
+    the branching DAG, its one count, which AQE runs as two jobs over
+    the two-scan union."""
+    m, jobs = _replay_jobs(spark, "replay-jobs.etl", pipelines.etl_data_pipeline,
+                           dag_csvs["hw"], str(tmp_path / "etl"))
+    assert m == {"rows_loaded": dag_csvs["hw_complete"]} and len(jobs) <= 3
+    m, jobs = _replay_jobs(spark, "replay-jobs.mongodb", pipelines.etl_data_pipeline_mongodb,
+                           dag_csvs["hw"], str(tmp_path / "mongodb"))
+    assert m == {"rows_loaded": dag_csvs["hw_complete"]} and len(jobs) <= 3
+    n = dag_csvs["union_non_empty"]
+    m, jobs = _replay_jobs(spark, "replay-jobs.complex",
+                           pipelines.etl_data_pipeline_mongodb_complex,
+                           dag_csvs["air"], dag_csvs["grades"], str(tmp_path / "complex"))
+    assert m == {"nb_lignes": n, "rows_loaded": n, "branch": "load"} and len(jobs) <= 7
+
+
+def test_complex_skip_branch_launches_no_write_job(spark, dag_csvs, tmp_path):
+    args = (pipelines.etl_data_pipeline_mongodb_complex, dag_csvs["air"], dag_csvs["grades"])
+    _, load = _replay_jobs(spark, "replay-skip.load", *args, str(tmp_path / "load"), min_rows=10)
+    coll = str(tmp_path / "skip")
+    m, skip = _replay_jobs(spark, "replay-skip.skip", *args, coll, min_rows=10**6)
+    assert m["branch"] == "skip" and m["rows_loaded"] == 0
+    assert not os.path.exists(coll)
+    assert len(skip) == len(load) - 1  # the same jobs, less the write
+    tracker = spark.sparkContext.statusTracker()
+    stage_names = {
+        tracker.getStageInfo(s).name
+        for j in skip for s in tracker.getJobInfo(j).stageIds
+        if tracker.getStageInfo(s) is not None
+    }
+    assert not any(name.startswith("parquet at") for name in stage_names), stage_names
+
+
+@pytest.mark.parametrize("text", ["a,b,c\n", "a,b,c\n,,\n1,,\n,,3\n"],
+                         ids=["header-only", "all-null"])
+def test_replays_count_zero_rows_on_empty_input(spark, tmp_path, text):
+    csv = tmp_path / "in.csv"
+    csv.write_text(text)
+    assert pipelines.etl_data_pipeline(spark, str(csv), str(tmp_path / "a")) == {"rows_loaded": 0}
+    m = pipelines.etl_data_pipeline_mongodb(spark, str(csv), str(tmp_path / "b"))
+    assert m == {"rows_loaded": 0}
 
 
 def test_kafka_to_mongo_pipeline_replay(spark, tmp_path):

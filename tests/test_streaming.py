@@ -21,6 +21,7 @@ from pipeline_airflow_docker_spark.streaming.windows import (
     session_counts,
     tumbling_counts,
 )
+from tools.stage_bytes import group_jobs
 
 
 def _rows(df):
@@ -50,6 +51,38 @@ def test_timed_out_bounded_query_raises_and_is_stopped(spark, sf_dir):
     with pytest.raises(TimeoutError, match="still running"):
         run_to_df(sdf, "append", foreach_batch=slow_batch, timeout_sec=1)
     assert {q.id for q in spark.streams.active} == before
+
+
+def test_run_to_df_leaves_no_memory_view(spark, sf_dir):
+    sdf = stream_table(spark, sf_dir, "events").select("event_id")
+    outs = [run_to_df(sdf, "append") for _ in range(2)]
+    views = [t.name for t in spark.catalog.listTables() if t.name.startswith("stream_out_")]
+    assert views == []
+    want = table(spark, sf_dir, "events").count()
+    assert [o.count() for o in outs] == [want, want]  # rows outlive the view
+
+
+def test_timed_out_memory_sink_leaves_no_view(spark, sf_dir):
+    """A memory sink stopped at its timeout holds partial rows; its
+    view must go with it."""
+    sleep = F.udf(lambda v: time.sleep(3) or v, "long")
+    sdf = stream_table(spark, sf_dir, "events").select(sleep("event_id"))
+    with pytest.raises(TimeoutError, match="still running"):
+        run_to_df(sdf, "append", timeout_sec=1)
+    views = [t.name for t in spark.catalog.listTables() if t.name.startswith("stream_out_")]
+    assert views == []
+
+
+def test_stream_table_reuses_staged_schema(spark, sf_dir):
+    first = stream_table(spark, sf_dir, "events")
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("stream-table-test.second", "stream_table")
+        second = stream_table(spark, sf_dir, "events")
+        assert group_jobs(spark, "stream-table-test.second") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert second.schema == first.schema
 
 
 def test_session_multibatch_state_merges(spark, sf_dir):
@@ -353,6 +386,10 @@ def test_file_arrival_incremental_pickup_via_checkpoint(spark, tmp_path):
         )
         q.awaitTermination(120)
 
+    # The restart below is proven under the manager local sessions use.
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass").endswith(
+        ".FileSystemBasedCheckpointFileManager"
+    )
     run_once()
     assert sorted(r.id for r in spark.read.parquet(sink).collect()) == [1]
 
